@@ -21,7 +21,6 @@ remain fully distributed.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column
@@ -43,18 +42,6 @@ NUMERIC_TYPES = ("int", "bigint", "double", "float", "smallint", "tinyint")
 
 def is_numeric_dtype(t: str) -> bool:
     return t in NUMERIC_TYPES or t.startswith("decimal")
-
-# Input-size threshold (plan-estimated bytes) above which quantile
-# verbs switch from the built-in ``F.percentile`` (full value-count
-# map buffered and merged on ONE reducer) to the sharded exact plan
-# in operators/quantiles.py. The buffer's memory is bounded by the
-# column's distinct values, for which scan size is the cheap proxy.
-# Size it like a broadcast threshold: well under one executor's
-# task memory (the default assumes >= 1 GiB per task slot).
-# Deployments tune it via SPARK_GRAFT_QUANTILE_BUFFER_MB.
-QUANTILE_BUFFER_MAX_BYTES = (
-    int(os.environ.get("SPARK_GRAFT_QUANTILE_BUFFER_MB", "256")) * 1024 * 1024
-)
 
 # drop_last's lazy plan tops-n the order keys toward the driver and
 # broadcasts them; above this n that side is itself driver-sized, so
@@ -166,17 +153,6 @@ class DataFrame:
 
     def _wrap(self, df: SparkDF) -> "DataFrame":
         return DataFrame(df)
-
-    def _plan_size_bytes(self) -> int:
-        """Catalyst's plan-side size estimate for this frame (file
-        sizes for scans, propagated through the plan). Reading it
-        runs NO job — it is the same statistic AQE and the broadcast
-        threshold consult. Under Spark Connect (no JVM handle) this
-        reports "large", routing gated verbs to their distributed
-        path (plans/stats.py)."""
-        from .plans.stats import plan_size_bytes
-
-        return plan_size_bytes(self.df)
 
     # -- core / exploration (Operations/Core.hs) -----------------------
 
@@ -695,7 +671,9 @@ class DataFrame:
         ):
             filled = self.df.fillna(strategy, subset=list(cols))
             return self._wrap(filled)
-        if strategy == "median" and self._plan_size_bytes() > QUANTILE_BUFFER_MAX_BYTES:
+        from .plans.stats import above
+
+        if strategy == "median" and above("quantile_buffer", self.df):
             # large input: sharded exact-median plan instead of the
             # single-reducer percentile buffer; pivot the long result
             # back to the same one-row __fill_* shape
@@ -1744,7 +1722,7 @@ class DataFrame:
 
         The quartile strategy is picked AUTOMATICALLY from the plan's
         size estimate (default ``distributed=None``): inputs under
-        the gate (< QUANTILE_BUFFER_MAX_BYTES) use the all-JVM
+        the ``quantile_buffer`` gate (plans/stats.py) use the all-JVM
         sorted-tails radix plan (exact_quantiles_tails — hit-bin
         arrays are gate-bounded; 0.57 s at sf0.1 vs 1.7 s for
         ``F.percentile``'s per-column hashmap buffers and 0.80 s for
@@ -1761,7 +1739,9 @@ class DataFrame:
             # path would otherwise build
             raise ValueError("summarize needs at least one numeric column")
         if distributed is None:
-            distributed = self._plan_size_bytes() > QUANTILE_BUFFER_MAX_BYTES
+            from .plans.stats import above
+
+            distributed = above("quantile_buffer", df)
         if distributed:
             return self._summarize_distributed(df, num_cols)
         # Small path, r8: ALL-JVM — the radix histogram locates each
@@ -2072,7 +2052,7 @@ class GroupedDataFrame:
         """Per-group EXACT interpolated quantiles.
 
         Strategy is picked from the plan-size estimate (same gate as
-        ``summarize``): inputs under QUANTILE_BUFFER_MAX_BYTES use the
+        ``summarize``): inputs under the ``quantile_buffer`` gate use the
         built-in ``percentile`` aggregate (one buffer per group — one
         hash-agg stage, ~10x cheaper when the buffer is known small);
         larger inputs use the sharded radix-bin plan
@@ -2084,11 +2064,10 @@ class GroupedDataFrame:
             exact_quantiles_grouped,
             grouped_quantiles_buffered,
         )
+        from .plans.stats import above
 
         if distributed is None:
-            distributed = (
-                DataFrame(self.df)._plan_size_bytes() > QUANTILE_BUFFER_MAX_BYTES
-            )
+            distributed = above("quantile_buffer", self.df)
         if distributed:
             return DataFrame(
                 exact_quantiles_grouped(self.df, self.keys, value_col, probs)

@@ -14,9 +14,13 @@ O(docs × bands), not O(docs²).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+log = logging.getLogger(__name__)
 
 # --- exact ------------------------------------------------------------
 
@@ -90,25 +94,8 @@ def shingle_arrays(
     )
 
 
-# shingle-chain engine knee (r13): above this input plan size the
-# mapInArrow tokenize→shingle→xxhash64 kernel amortizes its
-# Python-worker roundtrips; below it the JVM expression chain wins
-# on fixed cost. Placed at the MEASURED crossover (interleaved
-# cold-cache jaccard e2e, best-of-3, same session): sf0.001/sf0.01
-# (~64 KB plans) jvm 0.98-1.17 / 1.15-2.47 s vs arrow 1.23-1.94 /
-# 1.66-1.79 s — jvm wins; sf0.1 (580 KB) jvm 2.20-2.41 vs arrow
-# 1.77-1.93 s and 10x (6.9 MB) jvm 3.75-3.92 vs arrow 3.42-3.52 s —
-# arrow wins and keeps widening (chain stage at 100x: 10.2 -> 2.5 s).
-# So the knee sits between the two regimes; unlike the 32 MB sig
-# knee (_SIG_ARROW_KNEE) the chain kernel pays off from bench scale
-# up because it replaces regex-split + zip_with + array_distinct
-# interpreted work, not just hashing.
-_SHINGLE_ARROW_KNEE = 256 * 1024
-
-
 def hashed_shingle_arrays(
-    df: SparkDF, id_col: str, text_col: str, n: int = 3,
-    engine: str | None = None,
+    df: SparkDF, id_col: str, text_col: str, n: int = 3
 ) -> SparkDF:
     """The persisted (id, sh_arr: array<bigint>, n_sh) frame every
     shingle-based operator builds on. Centralized so jaccard_pairs,
@@ -117,39 +104,22 @@ def hashed_shingle_arrays(
     entry, so a query mix over the same corpus tokenizes + shingles
     + hashes it exactly once (r6).
 
-    ``engine`` (r13, guide §4.2): ``"arrow"`` runs the whole
-    tokenize → shingle → xxhash64 → distinct chain as ONE vectorized
-    mapInArrow kernel (_shingle_kernel); ``"jvm"`` keeps the pure
-    expression chain. Rows are identical either way (pinned by
+    Engine (r13, guide §4.2): above the ``shingle_kernel`` gate
+    (plans/stats.py — 256 KB, the measured crossover) the whole
+    tokenize → shingle → xxhash64 → distinct chain runs as ONE
+    vectorized mapInArrow kernel (_shingle_kernel); below it the pure
+    expression chain runs. Rows are identical either way (pinned by
     tests/test_dedup.py::test_shingle_kernel_matches_jvm — same ids,
     same hash values, same in-array order, same n_sh), so every
     downstream result — jaccard prefixes, minhash signatures and
     banding, contamination intersections — is unchanged by the
-    engine choice. ``None`` (default) gates on the input plan size
-    at ``_SHINGLE_ARROW_KNEE`` (256 KB — the measured crossover, see
-    the knee comment): sub-bench corpora keep the JVM plan, sf0.1
-    and every decade above take the kernel (at the 1000x cert corpus
-    the JVM chain_persist stage was 65-110 s — the top jaccard
-    stage; see OPTIMIZATION_r13.md). The
-    ``SPARK_GRAFT_SHINGLE_ENGINE`` env var overrides the gate so
-    parity sweeps and certification can oracle-verify either engine
-    at any SF (tools/certify.py arrow_parity)."""
-    import os
+    engine choice. Sub-bench corpora keep the JVM plan; sf0.1 and
+    every decade above take the kernel (at the 1000x cert corpus the
+    JVM chain_persist stage was 65-110 s — the top jaccard stage;
+    see OPTIMIZATION_r13.md)."""
+    from ..plans.stats import above
 
-    forced = os.environ.get("SPARK_GRAFT_SHINGLE_ENGINE")
-    if forced:
-        engine = forced
-    if engine is None:
-        from ..plans.stats import plan_size_bytes
-
-        engine = (
-            "arrow"
-            if plan_size_bytes(df) > _SHINGLE_ARROW_KNEE
-            else "jvm"
-        )
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"engine must be 'arrow' or 'jvm', got {engine!r}")
-    if engine == "jvm":
+    if not above("shingle_kernel", df):
         return _reusable(_hash_arrays(shingle_arrays(df, id_col, text_col, n)))
     from ..plans.hints import ensure_scan_parallelism
 
@@ -186,9 +156,6 @@ def jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    broadcast_df_table: bool | None = None,
-    order: str = "hash",
-    demote_hot: bool | None = None,
 ) -> SparkDF:
     """All pairs (a < b) with word-n-gram Jaccard >= threshold —
     EXACT result via prefix filtering (PPJoin-style).
@@ -209,37 +176,27 @@ def jaccard_pairs(
     shingle table — verification shuffle is O(candidates + docs),
     not O(total shingles).
 
-    ``order`` picks the global order, i.e. the candidate strategy —
-    the OUTPUT is identical (r10 test pins it):
-
-    - ``"hash"`` (default): order by (demoted?, shingle hash). The
-      order is a pure per-element function, so every doc's prefix is
-      computed IN-ROW (array_sort + slice) and the plan has ZERO
-      corpus-scale shuffles — the only shuffled stream is the prefix
-      entries themselves (~the prefix fraction of shingle
-      occurrences) into the candidate join. The df-ordered plan, by
-      contrast, paid a corpus-wide document-frequency groupBy AND a
-      corpus-wide join-back; at the 1000x cert those two shuffles
-      (~1.1 B rows each way) were exactly the spill-bound stages
-      that made it super-linear on a fixed box. A uniform hash
-      order costs more candidates than rarest-first — hot
-      (stopword-heavy) shingles may land in prefixes and fan out
-      quadratically — so hot shingles are DEMOTED to sort last: a
-      1% seeded sample estimates high-df shingles (absolute
-      detection floor ~hot_min/fraction docs, corpus-size
-      independent), and membership ships as a bitmap LITERAL probed
-      in-row (O(1) array index, no broadcast, no join). Demotion
-      changes only the order — any set demoted by any sample is
-      still a consistent order — so sampling affects performance,
-      never the result. ``demote_hot`` None auto-enables it when
-      the input plan is large (small corpora can't have buckets big
-      enough to matter and skip the sample job entirely).
-    - ``"df"``: the legacy rarest-first (global document frequency
-      ascending) order — minimal candidates, but pays the two
-      corpus-wide shuffles; ``broadcast_df_table`` gates its df
-      join strategy as before. Kept for cross-validation and for
-      corpora so adversarially templated that candidate count
-      dominates shuffle volume."""
+    The global order is (demoted?, shingle hash). It is a pure
+    per-element function, so every doc's prefix is computed IN-ROW
+    (array_sort + slice) and the plan has ZERO corpus-scale
+    shuffles — the only shuffled stream is the prefix entries
+    themselves (~the prefix fraction of shingle occurrences) into
+    the candidate join. (A rarest-first order — global document
+    frequency ascending — needs a corpus-wide df groupBy AND a
+    corpus-wide join-back; at the 1000x cert those two shuffles were
+    the spill-bound stages that made it super-linear on a fixed box.)
+    A uniform hash order costs more candidates than rarest-first —
+    hot (stopword-heavy) shingles may land in prefixes and fan out
+    quadratically — so above the ``dedup_scale`` gate hot shingles
+    are DEMOTED to sort last: a 1%
+    seeded sample estimates high-df shingles (absolute detection
+    floor ~hot_min/fraction docs, corpus-size independent), and
+    membership ships as a bitmap LITERAL probed in-row (O(1) array
+    index, no broadcast, no join). Demotion changes only the order —
+    any set demoted by any sample is still a consistent order — so
+    sampling affects performance, never the result; small corpora
+    can't have buckets big enough to matter and skip the sample job
+    entirely."""
     # The ENTIRE pipeline runs on xxhash64(shingle) longs, never the
     # shingle strings: the global order, the candidate join key, and
     # verification all only need a stable shingle identity, so every
@@ -248,114 +205,31 @@ def jaccard_pairs(
     # (~pairs/2^64) could only ADD a candidate, which exact
     # verification rejects — except for in-verify collisions, the
     # same vanishing risk _hash_arrays already documents.
-    if order not in ("hash", "df"):
-        raise ValueError(f"order must be 'hash' or 'df', got {order!r}")
+    from ..plans.stats import above
+
     arrs = hashed_shingle_arrays(df, id_col, text_col, n)
-    if order == "hash":
-        from ..plans.stats import plan_size_bytes
-
-        # one knee for every scale-only mechanism: hot-shingle
-        # demotion, the truncated-bound pre-verify, and the counted
-        # broadcast-verify all pay fixed stages (a sample job, three
-        # slim joins, an eager count) that only amortize when the
-        # corpus is big enough for candidate volume to matter; below
-        # the knee the simple shapes win (measured 2.0 s vs 10.0 s
-        # at sf0.1) and the RESULT is identical either way
-        big = plan_size_bytes(df) > 128 * 1024 * 1024
-        if demote_hot is None:
-            demote_hot = big
-        prefix = _hash_order_prefix(
-            arrs, df, id_col, text_col, n, threshold, demote_hot
-        )
-        if big:
-            # BARRIER (r11, measured): materialize the persisted
-            # prefix (and, en route, the arrs cache under it) BEFORE
-            # the self-join consumes it from two sides. Without it
-            # the two join-side stages launch concurrently against
-            # the cold cache and every second task blocks on the
-            # per-block compute lock while holding a core — the
-            # whole cold chain runs at a fraction of the box: the
-            # 1000x e2e wall read 246-273 s where the staged
-            # decomposition of the same pipeline sums to ~99 s. One
-            # cheap count turns the racing stages into warm scans.
-            _materialize(prefix)
-        cands = _prefix_candidates(prefix, threshold)
-        if big:
-            cands = _truncated_bound_filter(cands, arrs, threshold)
-            return _verify_jaccard(cands, arrs, threshold)
-        return _verify_jaccard(cands, arrs, threshold, broadcast_pairs=False)
-    exploded = arrs.select("id", "n_sh", F.explode("sh_arr").alias("shingle"))
-    # Global document frequency, but only for REPEATED shingles: a
-    # shingle with df == 1 can never produce a candidate pair, and in
-    # the rarest-first order all df==1 shingles tie anyway (break by
-    # shingle hash). The df>=2 set is a small fraction of the corpus
-    # vocabulary, so it broadcasts — turning the df lookup from a
-    # full shuffle join of the exploded table into a map-side join.
-    dfreq = (
-        exploded.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") >= 2)
-    )
-    # Rarest-first rank WITHOUT a full-corpus window: in the
-    # (df asc, shingle asc) order every df==1 shingle sorts before
-    # every repeated one, so a repeated shingle's global rank inside
-    # its doc is n1 + (rank among the doc's repeated shingles),
-    # where n1 = n_sh - n2 needs only counts. And df==1 shingles
-    # never join across docs, so only repeated prefix entries need
-    # emitting at all. That turns the old row_number window — a
-    # shuffle+sort of EVERY shingle occurrence in the corpus — into
-    # a groupBy of just the repeated occurrences (a small fraction),
-    # with the sort done per-row over the collected struct array.
-    # Shuffles left: dfreq groupBy, the repeated-occurrence groupBy,
-    # the candidate join, and verification — each bounded by data or
-    # candidate size, nothing quadratic.
-    # broadcast_df_table: None (default) auto-gates on the INPUT plan
-    # size — the repeated-shingle vocabulary grows with the corpus
-    # (27M rows on the 1000x cert corpus), and a forced broadcast of
-    # a vocabulary that big builds a GB-scale single-threaded hash
-    # relation (measured at 100x: 29.8 s forced vs 16.2 s shuffled,
-    # cold). Small corpora keep the broadcast (the dfreq side is a
-    # few MB and the map-side join skips a shuffle of the exploded
-    # table). Explicit True/False still forces either plan; the
-    # RESULT is identical either way — only the join strategy moves.
-    if broadcast_df_table is None:
-        from ..plans.stats import plan_size_bytes
-
-        broadcast_df_table = plan_size_bytes(df) <= 128 * 1024 * 1024
-    rep = exploded.join(
-        F.broadcast(dfreq) if broadcast_df_table else dfreq, "shingle"
-    )  # inner: df >= 2 only
-    per_doc = rep.groupBy("id", "n_sh").agg(
-        F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("__reps")
-    )
-    # prefix length: n_sh - ceil(t * n_sh) + 1 (n_sh rides along from
-    # shingle_arrays — no second pass); keep size + position for the
-    # in-join filters
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    n1 = F.col("n_sh") - F.size("__reps")
-    k = (prefix_len - n1).cast("int")  # repeated entries inside the prefix
-    # The prefix frame is PERSISTED (r6): the candidate self-join
-    # consumes it twice (a- and b-side), and Spark 4's AQE does not
-    # reuse the exchange across the two aliased projections — without
-    # the persist the whole dfreq + regroup lineage (two shuffles and
-    # a broadcast build) ran once per side, measured 11 Spark jobs
-    # vs 5 and ~2x the warm wall at sf0.1. The cached frame is one
-    # thin row per prefix entry (~20% of shingle occurrences).
-    prefix = _reusable(
-        per_doc.select(
-            "id",
-            "n_sh",
-            n1.alias("__n1"),
-            F.posexplode(F.slice("__reps", F.lit(1), F.greatest(k, F.lit(0)))),
-        ).select(
-            "id",
-            F.col("col.shingle").alias("shingle"),
-            "n_sh",
-            (F.col("__n1") + F.col("pos") + 1).alias("pos"),
-        )
-    )
+    # one knee (dedup_scale) for every scale-only mechanism: hot-shingle
+    # demotion, the barrier, the truncated-bound pre-verify and the
+    # counted broadcast-verify each pay a fixed stage that only
+    # amortizes at corpus scale; the RESULT is identical either way
+    big = above("dedup_scale", df)
+    prefix = _hash_order_prefix(arrs, df, id_col, text_col, n, threshold, big)
+    if big:
+        # BARRIER (r11, measured): materialize the persisted prefix
+        # (and, en route, the arrs cache under it) BEFORE the
+        # self-join consumes it from two sides. Without it the two
+        # join-side stages launch concurrently against the cold cache
+        # and every second task blocks on the per-block compute lock
+        # while holding a core — the whole cold chain runs at a
+        # fraction of the box: the 1000x e2e wall read 246-273 s
+        # where the staged decomposition of the same pipeline sums to
+        # ~99 s. One cheap count turns the racing stages into warm
+        # scans.
+        _materialize(prefix)
     cands = _prefix_candidates(prefix, threshold)
-    # legacy path keeps the legacy verify shape (no eager count)
+    if big:
+        cands = _truncated_bound_filter(cands, arrs, threshold)
+        return _verify_jaccard(cands, arrs, threshold)
     return _verify_jaccard(cands, arrs, threshold, broadcast_pairs=False)
 
 
@@ -366,8 +240,8 @@ def _prefix_candidates(prefix: SparkDF, threshold: float) -> SparkDF:
     (overlap <= min(na-pa, nb-pb)+1 must reach
     α = ceil(t/(1+t)·(na+nb)); ``pos`` is the 1-based position of
     the entry in its doc's globally-ordered shingle list) applied
-    INSIDE the join, before the distinct. Shared by both global
-    orders — the filters are order-agnostic.
+    INSIDE the join, before the distinct. The filters hold under any
+    consistent global order.
 
     r13 — LOSSLESS index/probe prefix asymmetry (the PPJoin indexing
     prefix): direct each unordered pair by (n_sh, id) instead of id
@@ -544,7 +418,7 @@ def _hash_order_prefix(
     text_col: str,
     n: int,
     threshold: float,
-    demote_hot: bool | None,
+    demote_hot: bool,
 ) -> SparkDF:
     """(id, shingle, n_sh, pos) prefix entries under the
     (demoted?, hash) global order — computed IN-ROW: sort the per-doc
@@ -553,15 +427,10 @@ def _hash_order_prefix(
     is persisted because the candidate self-join consumes it twice
     (AQE does not reuse the exchange across the two aliased sides).
 
-    ``demote_hot`` None auto-enables hot-shingle demotion when the
-    source plan exceeds the broadcast-gate size (the same 128 MB
-    knee jaccard's legacy path uses): below it, bucket sizes are too
-    small for fan-out to matter and the sample job is pure
-    overhead."""
-    if demote_hot is None:
-        from ..plans.stats import plan_size_bytes
-
-        demote_hot = plan_size_bytes(src) > 128 * 1024 * 1024
+    ``demote_hot`` runs the hot-shingle sample over ``src`` and sorts
+    the sampled hot shingles last; jaccard_pairs enables it above
+    the ``dedup_scale`` gate, below which bucket sizes are too small
+    for fan-out to matter and the sample job is pure overhead."""
     probe = (
         _sampled_hot_probe(src, id_col, text_col, n) if demote_hot else None
     )
@@ -731,25 +600,14 @@ def _materialize(df: SparkDF) -> None:
     is computed by whichever task arrives first while its twin
     BLOCKS on the storage lock holding a scheduler slot — measured
     2.5-2.8x wall inflation on the jaccard big path (see
-    jaccard_pairs). Connect sessions without count support just skip
-    the barrier: the plan stays correct, only the scheduling
-    optimization is lost.
-
-    ``SPARK_GRAFT_NO_CACHE_BARRIER=1`` turns every barrier into a
-    no-op (r12): the barrier is a pure scheduling optimization with
-    zero effect on results, and the toggle lets the certification
-    A/B (tools/certify.py barrier_ab) measure barrier-on vs
-    barrier-off walls of the IDENTICAL plan interleaved in one
-    session — committing the r11 cache-racing diagnosis as an
-    artifact instead of prose (VERDICT r11 ask #6)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_CACHE_BARRIER") == "1":
-        return
+    jaccard_pairs). The barrier is a scheduling optimization with no
+    effect on results, so a failed count (e.g. a Connect session
+    quirk) is logged at debug and the plan continues lazily — never
+    dropped silently (plans/cache.py convention)."""
     try:
         df.count()
-    except Exception:  # pragma: no cover - Connect count quirks
-        pass
+    except Exception as exc:
+        log.debug("cache barrier skipped: %r", exc)
 
 
 def _reusable(df: SparkDF) -> SparkDF:
@@ -1459,13 +1317,6 @@ def source_overlap(
     )
 
 
-# bench sets whose raw-text plan estimate exceeds this shuffle-join
-# instead of riding as one in-row array (~8 B per distinct shingle
-# PER TASK when broadcast — fine for real eval suites, wrong once
-# the "bench" side is itself corpus-sized)
-BENCH_BROADCAST_MAX_BYTES = 4 * 1024 * 1024
-
-
 def contamination_scores(
     df: SparkDF,
     id_col: str,
@@ -1489,18 +1340,16 @@ def contamination_scores(
     compact; a cross-set collision could only add ~1/2^64 noise to a
     count). The in-row pass costs O(corpus_rows × bench_set) though,
     so the default (``broadcast_bench=None``) GATES on the bench
-    plan's size estimate (the summarize pattern): above
-    BENCH_BROADCAST_MAX_BYTES it shuffle-joins instead — one corpus
+    plan's size estimate (the summarize pattern): above the
+    ``contamination_bench_broadcast`` gate it shuffle-joins instead — one corpus
     explode + one count groupBy, O(corpus + bench) at any scale
     (caught by the r5 full-headline 10x sweep: the in-row path went
     super-linear when the bench side grew with the corpus). Both
     paths produce identical rows; pass True/False to force one."""
     if broadcast_bench is None:
-        from ..plans.stats import plan_size_bytes
+        from ..plans.stats import above
 
-        broadcast_bench = (
-            plan_size_bytes(bench_df) <= BENCH_BROADCAST_MAX_BYTES
-        )
+        broadcast_bench = not above("contamination_bench_broadcast", bench_df)
     corpus = _hash_arrays(shingle_arrays(df, id_col, text_col, n))
     bench_toks = F.filter(tokens_expr(bench_text_col), lambda x: x != F.lit(""))
     bench = bench_df.select(
@@ -1624,16 +1473,11 @@ def edit_distance_pairs(
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") >= 2)
     )
-    # same auto-gate as jaccard_pairs: the repeated-gram vocabulary
-    # grows with the corpus, so only force the broadcast below a
-    # small-input plan-size bound
-    from ..plans.stats import plan_size_bytes
+    # the repeated-gram vocabulary grows with the corpus, so only
+    # force the broadcast below the dedup_scale gate
+    from ..plans.stats import above
 
-    dfreq_side = (
-        F.broadcast(dfreq)
-        if plan_size_bytes(df) <= 128 * 1024 * 1024
-        else dfreq
-    )
+    dfreq_side = dfreq if above("dedup_scale", df) else F.broadcast(dfreq)
     rep = exploded.join(dfreq_side, "g")
     per_str = rep.groupBy("id", "len", "n_g").agg(
         F.sort_array(F.collect_list(F.struct("df", "g"))).alias("__reps")
@@ -1713,7 +1557,6 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     num_perm: int = 64,
-    engine: str | None = None,
 ) -> SparkDF:
     """(id, sig: array<bigint>) — num_perm min-hashes per document.
 
@@ -1725,24 +1568,15 @@ def minhash_signatures(
     array: a narrow projection fused into the scan, ZERO shuffles —
     the former explode + 64-way min-agg formulation paid a full
     shuffle of every (id, hash) row for the same result (2x slower
-    at sf0.1). ``engine`` (r12): ``"arrow"`` runs the
-    num_perm×|sh_arr| hash loop as a vectorized mapInArrow kernel,
-    ``"jvm"`` the original array_min ∘ transform expression —
-    values bit-identical either way; ``None`` (default) gates on
-    the input plan size like minhash_dedup_pairs (small corpora
-    skip the Python-worker roundtrip)."""
-    forced = __import__("os").environ.get("SPARK_GRAFT_SIG_ENGINE")
-    if forced:
-        engine = forced
-    if engine is None:
-        from ..plans.stats import plan_size_bytes
+    at sf0.1). Above the ``minhash_sig_kernel`` gate (r12) the
+    num_perm×|sh_arr| hash loop runs as a vectorized mapInArrow
+    kernel, below it as the array_min ∘ transform expression —
+    values bit-identical either way (small corpora skip the
+    Python-worker roundtrip)."""
+    from ..plans.stats import above
 
-        engine = (
-            "arrow"
-            if plan_size_bytes(df) > _SIG_ARROW_KNEE
-            else "jvm"
-        )
     arrs_h = _hash_arrays(shingle_arrays(df, id_col, text_col, n))
+    engine = "arrow" if above("minhash_sig_kernel", df) else "jvm"
     return _minhash_sigs_frame(arrs_h, num_perm, engine)
 
 
@@ -1766,12 +1600,6 @@ def _minhash_sig_expr(num_perm: int):
             F.transform("sh_arr", lambda h: F.xxhash64(h, i))
         ),
     )
-
-
-# signature-engine knee (r12): above this input plan size the
-# mapInArrow signature kernel amortizes its Python-worker roundtrip
-# (see minhash_dedup_pairs for the measured crossover)
-_SIG_ARROW_KNEE = 32 * 1024 * 1024
 
 
 def _minhash_sig_kernel(num_perm: int):
@@ -1955,8 +1783,11 @@ def lsh_candidate_pairs(
     80.4-82.9 s (shipped r12 shape) → 49-58 s persisted. Off by
     default: at bench scale the extra cache write + barrier count
     cost more than the recompute (the same fixed-stage reasoning as
-    every other `big` knee); minhash_dedup_pairs passes its 128 MB
-    input-plan gate."""
+    every other `big` knee); minhash_dedup_pairs passes its
+    ``dedup_scale`` gate. The barrier is EAGER: with
+    ``persist_bands=True`` this call itself runs one Spark job (a
+    count over the banded frame) before it returns, instead of
+    leaving all work to the caller's first action."""
     if rows_per_band < 1:
         # e.g. num_perm // bands with bands > num_perm: every band
         # slice would be empty and hash to ONE constant bucket — a
@@ -2021,7 +1852,6 @@ def minhash_dedup_pairs(
     bands: int = 16,
     threshold: float = 0.8,
     max_bucket: int | None = None,
-    engine: str | None = None,
 ) -> SparkDF:
     """Full pipeline: minhash → LSH candidates → exact-Jaccard verify.
 
@@ -2040,14 +1870,9 @@ def minhash_dedup_pairs(
     identical to the uncollapsed plan; only the candidate join is
     spared the quadratic blowup. ``max_bucket`` additionally caps
     surviving band buckets (recall-trading, off by default; see
-    lsh_candidate_pairs). ``engine`` picks the signature
-    implementation — ``"arrow"`` kernel / ``"jvm"`` expression,
-    bit-identical values, identical output; ``None`` (default)
-    gates on the input plan size at ``_SIG_ARROW_KNEE`` (32 MB —
-    lower than the fixed-stage knee because the kernel's only
-    fixed cost is a ~0.3 s Python-worker roundtrip; measured
-    crossover in the body comment), so small corpora keep the JVM
-    expression and big ones take the kernel."""
+    lsh_candidate_pairs). The signature engine follows
+    minhash_signatures' ``minhash_sig_kernel`` gate (arrow kernel /
+    JVM expression, bit-identical values, identical output)."""
     if bands < 1 or num_perm % bands != 0:
         # non-divisible num_perm would silently discard trailing
         # signature rows; bands > num_perm would degenerate to one
@@ -2059,26 +1884,13 @@ def minhash_dedup_pairs(
     # the hashed-arrays plan is IDENTICAL to jaccard_pairs', so both
     # operators share one cache entry; __g goes on top of the cache
     arrs_h = hashed_shingle_arrays(df, id_col, text_col, n)
-    from ..plans.stats import plan_size_bytes
+    from ..plans.stats import above
 
     # the jaccard_pairs knee gates the fixed-stage mechanisms (the
-    # counted broadcast-verify, the sigs cache barrier); the
-    # signature engine has its own MUCH lower knee because its
-    # fixed cost is only the Python-worker roundtrip (~0.3 s),
-    # not extra stages — measured crossover (interleaved A/B,
-    # cold-cache e2e): sf0.1 (0.6 MB plan) jvm wins by 0.35 s,
-    # 10x (7 MB) a wash (4.53 vs 4.54 s), 100x (70 MB) the kernel
-    # wins the signature stage 9.03 -> 2.70 s
-    sz = plan_size_bytes(df)
-    big = sz > 128 * 1024 * 1024
-    # SPARK_GRAFT_SIG_ENGINE overrides the knee so parity sweeps can
-    # oracle-verify the kernel path at driver SFs (r13, VERDICT r12
-    # ask #3b; tools/certify.py arrow_parity)
-    forced = __import__("os").environ.get("SPARK_GRAFT_SIG_ENGINE")
-    if forced:
-        engine = forced
-    if engine is None:
-        engine = "arrow" if sz > _SIG_ARROW_KNEE else "jvm"
+    # counted broadcast-verify, the sigs cache barrier, the band
+    # persist); the signature engine has its own much lower knee
+    big = above("dedup_scale", df)
+    engine = "arrow" if above("minhash_sig_kernel", df) else "jvm"
     # group stats shuffle ONLY (group-hash, id) pairs — the shingle
     # arrays never move for the collapse; representative rows are
     # then picked by a narrow join (the gstats side is 2 slim

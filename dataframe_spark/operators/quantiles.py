@@ -491,9 +491,9 @@ def winsorize(
     bounds frame is one row per (group) regardless of data size, so
     the clip is a map-side operation at any scale."""
     if distributed is None:
-        from ..plans.stats import plan_size_bytes
+        from ..plans.stats import above
 
-        distributed = plan_size_bytes(df) > 256 * 1024 * 1024
+        distributed = above("quantile_buffer", df)
     fn = exact_quantiles_grouped if distributed else grouped_quantiles_buffered
     q = fn(df, list(group_cols), value_col, [float(lower), float(upper)])
     bounds = q.groupBy(*group_cols).agg(

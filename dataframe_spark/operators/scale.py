@@ -119,9 +119,9 @@ def robust_scale(
     from .quantiles import exact_quantiles_grouped, grouped_quantiles_buffered
 
     if distributed is None:
-        from ..plans.stats import plan_size_bytes
+        from ..plans.stats import above
 
-        distributed = plan_size_bytes(df) > 256 * 1024 * 1024
+        distributed = above("quantile_buffer", df)
     if keys:
         fn = exact_quantiles_grouped if distributed else grouped_quantiles_buffered
         q = fn(df, keys, value_col, probs)
@@ -512,9 +512,9 @@ def mad_outliers(
     )
 
     if distributed is None:
-        from ..plans.stats import plan_size_bytes
+        from ..plans.stats import above
 
-        distributed = plan_size_bytes(df) > 256 * 1024 * 1024
+        distributed = above("quantile_buffer", df)
     fn = exact_quantiles_grouped if distributed else grouped_quantiles_buffered
 
     def _median_of(frame, col):

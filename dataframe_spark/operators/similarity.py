@@ -768,23 +768,6 @@ def knn_lsh(
     )
 
 
-# semdedup edge-engine knee (r13): above this input plan size the
-# within-cluster pair join runs as the bucketed-GEMM kernel instead
-# of the per-pair JVM expression join. The r13 semdedup phase
-# profile (CERT_vectors_stages_r13) put the expression join at
-# 615 s of the 731 s 1000x wall — 512 M candidate pairs each paying
-# an interpreted 256-term aggregate() dot product, exactly the
-# per-pair arithmetic bucketed_cosine_pairs replaces with dense
-# matmul (measured ~50x on 256-dim floats). Driver SFs sit far
-# below the knee and keep the expression join, so every declared
-# query's floats are byte-identical; at cert scale the two engines
-# agree up to summation-order ulps at the tau boundary (GEMM sums
-# blockwise, the expression sequentially — the same class of
-# difference the query contract's rounding absorbs elsewhere), and
-# set-equality on non-degenerate data is test-pinned.
-_SEMDEDUP_GEMM_KNEE = 128 * 1024 * 1024
-
-
 def semdedup(
     df: SparkDF,
     id_col: str,
@@ -794,7 +777,6 @@ def semdedup(
     max_iter: int = 3,
     seed: int = 42,
     centroids=None,
-    edge_engine: str | None = None,
 ) -> SparkDF:
     """SemDeDup semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-partition the embedding space, then
@@ -824,17 +806,20 @@ def semdedup(
     deterministic, tie-stable choice — swap via the returned flags
     if centroid-distance policy is needed).
 
-    ``edge_engine`` (r13): ``"gemm"`` computes the within-cluster
-    pair join with the bucketed-GEMM kernel (bucket = cluster id,
-    unrounded threshold — see _SEMDEDUP_GEMM_KNEE), ``"jvm"`` the
-    per-pair expression join; ``None`` gates on input plan size so
-    small corpora (every driver SF) keep the expression join's
-    byte-exact floats while cert-scale corpora take the kernel.
-    ``SPARK_GRAFT_SEMDEDUP_EDGES`` overrides for tests/cert. The
-    GEMM path requires an integral id (falls back to the
-    expression join otherwise)."""
-    import os
-
+    Edge engine (r13): above the ``semdedup_gemm`` gate
+    (plans/stats.py) the within-cluster pair join runs as
+    bucketed-GEMM tiles (bucket = cluster id, raw unrounded
+    similarities thresholded at ``tau``); below it, and for
+    non-integral ids (GEMM ids ride int64 numpy), it runs as the
+    per-pair expression join. Every driver SF sits below the knee,
+    so declared queries keep the expression join's byte-exact
+    floats. Above it the two engines agree except at the tau
+    boundary: GEMM sums each dot product blockwise, the expression
+    sequentially, so a pair whose cosine lies within a few ulps of
+    ``tau`` can land on opposite sides — the same summation-order
+    class of difference the query contract's rounding absorbs
+    elsewhere. Set-equality on non-degenerate data is test-pinned."""
+    from ..plans.stats import above
     from .dedup import _reusable
     from .graph import connected_components
 
@@ -854,25 +839,9 @@ def semdedup(
                 df, id_col, vec_col, k=k, max_iter=max_iter, seed=seed
             )
         assign = _assign_udf(_unit_rows(centroids))
-    forced = os.environ.get("SPARK_GRAFT_SEMDEDUP_EDGES")
-    if forced:
-        edge_engine = forced
-    if edge_engine is None:
-        from ..plans.stats import plan_size_bytes
-
-        edge_engine = (
-            "gemm"
-            if plan_size_bytes(df) > _SEMDEDUP_GEMM_KNEE
-            else "jvm"
-        )
-    if edge_engine not in ("gemm", "jvm"):
-        raise ValueError(
-            f"edge_engine must be 'gemm' or 'jvm', got {edge_engine!r}"
-        )
-    if edge_engine == "gemm" and dict(df.dtypes).get(id_col) not in (
+    gemm = above("semdedup_gemm", df) and dict(df.dtypes).get(id_col) in (
         "int", "bigint", "smallint", "tinyint"
-    ):
-        edge_engine = "jvm"  # GEMM ids ride int64 numpy
+    )  # GEMM ids ride int64 numpy
     sides = _reusable(
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("id"), _dvec(vec_col).alias("__v"))
@@ -883,14 +852,14 @@ def semdedup(
     # times before the first localCheckpoint (symmetrize union,
     # large-star join, node-universe scan) — without this the
     # dominant within-cluster pairwise join re-runs per consumer
-    if edge_engine == "gemm":
+    if gemm:
         # the within-cluster pair join as dense matmul tiles
         # (bucket = cluster id, raw unrounded sims thresholded at
-        # tau) — see _SEMDEDUP_GEMM_KNEE for the equivalence and
-        # knee rationale. Barrier first: the GEMM's groupBy consumes
-        # sides once, but CC + the final join re-read it, and the
-        # assign UDF is the expensive map work a cold-cache race
-        # would re-run (see dedup._materialize).
+        # tau) — see the semdedup_gemm knee in plans/stats.py for
+        # the equivalence and knee rationale. Barrier first: the
+        # GEMM's groupBy consumes sides once, but CC + the final join
+        # re-read it, and the assign UDF is the expensive map work a
+        # cold-cache race would re-run (see dedup._materialize).
         from .dedup import _materialize
 
         _materialize(sides)

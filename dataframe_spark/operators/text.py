@@ -628,13 +628,11 @@ def perplexity_score(df, id_col: str, text_col: str, lm, totals, carry=()):
     )
     # broadcast only a BOUNDED lm: with top_v=None the lm is the full
     # corpus vocabulary, and forcing a broadcast would ship it to the
-    # driver at corpus scale — leave that case to AQE (same escape
-    # hatch rationale as jaccard_pairs' broadcast_df_table)
-    from ..plans.stats import plan_size_bytes
+    # driver at corpus scale — above the lm_broadcast gate that case
+    # is left to AQE
+    from ..plans.stats import above
 
-    lm_side = (
-        F.broadcast(lm) if plan_size_bytes(lm) <= 256 * 1024 * 1024 else lm
-    )
+    lm_side = lm if above("lm_broadcast", lm) else F.broadcast(lm)
     scored = (
         pairs.join(lm_side, "token", "left")
         .crossJoin(F.broadcast(totals))
@@ -686,7 +684,7 @@ def ppl_buckets(
     bits with aggregation order); ties at a cutoff land in the LOWER
     bucket (quantile_bucket's convention). Zero-token docs are
     absent (nothing to score), matching perplexity_score."""
-    from ..plans.stats import plan_size_bytes
+    from ..plans.stats import above
     from .quantiles import exact_quantiles_grouped, grouped_quantiles_buffered
 
     from ..operators.dedup import _reusable
@@ -706,7 +704,7 @@ def ppl_buckets(
     probs = [i / len(labels) for i in range(1, len(labels))]
     fn = (
         exact_quantiles_grouped
-        if plan_size_bytes(df) > 256 * 1024 * 1024
+        if above("quantile_buffer", df)
         else grouped_quantiles_buffered
     )
     cuts = (
@@ -1320,7 +1318,7 @@ def bigram_perplexity_score(
     rounded to 12 decimals so engines quoting ``0.3`` literally
     agree with the float ``1.0 − 0.7``."""
     from ..plans.hints import ensure_scan_parallelism
-    from ..plans.stats import plan_size_bytes
+    from ..plans.stats import above
 
     from .dedup import window_array_expr
 
@@ -1348,14 +1346,8 @@ def bigram_perplexity_score(
         F.col("__p.token").alias("bigram"),
         F.col("__p.tf").cast("long").alias("tf"),
     )
-    bilm_side = (
-        F.broadcast(bilm) if plan_size_bytes(bilm) <= 256 * 1024 * 1024 else bilm
-    )
-    uni_side = (
-        F.broadcast(unilm)
-        if plan_size_bytes(unilm) <= 256 * 1024 * 1024
-        else unilm
-    )
+    bilm_side = bilm if above("lm_broadcast", bilm) else F.broadcast(bilm)
+    uni_side = unilm if above("lm_broadcast", unilm) else F.broadcast(unilm)
     scored = (
         pairs.join(bilm_side, "bigram", "left")
         .withColumn("__w2", F.substring_index("bigram", " ", -1))

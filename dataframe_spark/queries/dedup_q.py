@@ -424,11 +424,10 @@ def q_decontaminate(spark, sf_dir):
     broadcast-vs-shuffle gate keeps its pre-r6 semantics: it sizes
     the RAW bench docs, exactly what contamination_scores gates on."""
     from ..operators.dedup import (
-        BENCH_BROADCAST_MAX_BYTES,
         contamination_scores_hashed,
         hashed_shingle_arrays,
     )
-    from ..plans.stats import plan_size_bytes
+    from ..plans.stats import above
 
     docs = _t(spark, sf_dir, "documents").df
     arrs = hashed_shingle_arrays(docs, "doc_id", "text", 3)
@@ -436,9 +435,8 @@ def q_decontaminate(spark, sf_dir):
         F.explode("sh_arr").alias("shingle")
     )
     corpus = arrs.where(F.col("id") % 97 != 0)
-    broadcast_bench = (
-        plan_size_bytes(docs.where(F.col("doc_id") % 97 == 0))
-        <= BENCH_BROADCAST_MAX_BYTES
+    broadcast_bench = not above(
+        "contamination_bench_broadcast", docs.where(F.col("doc_id") % 97 == 0)
     )
     out = contamination_scores_hashed(corpus, bench, broadcast_bench)
     return out.select(

@@ -98,7 +98,7 @@ def test_histogram_constant_column(small):
 
 
 def test_summarize_auto_cutover(lineitem, monkeypatch):
-    import dataframe_spark.core as core
+    from dataframe_spark.plans.stats import KNEES
 
     li = lineitem.select(["l_quantity", "l_discount"])
     # small input → gate-bounded sorted-tails plan (hit-bin
@@ -108,7 +108,7 @@ def test_summarize_auto_cutover(lineitem, monkeypatch):
     assert "sort_array" in plan
     # above-threshold input → sharded exact-quantile plan engages
     # (bounded state: no collected bin arrays, no percentile buffer)
-    monkeypatch.setattr(core, "QUANTILE_BUFFER_MAX_BYTES", 0)
+    monkeypatch.setitem(KNEES, "quantile_buffer", 0)
     dist = li.summarize()
     plan_d = dist.df._jdf.queryExecution().optimizedPlan().toString()
     assert "sort_array" not in plan_d
@@ -144,12 +144,12 @@ def test_summarize_bin_straddle(spark):
 
 
 def test_impute_median_auto_cutover(small, monkeypatch):
-    import dataframe_spark.core as core
+    from dataframe_spark.plans.stats import KNEES
 
     expected = sorted(
         r["val"] for r in small.impute(["val"], "median").collect()
     )
-    monkeypatch.setattr(core, "QUANTILE_BUFFER_MAX_BYTES", 0)
+    monkeypatch.setitem(KNEES, "quantile_buffer", 0)
     got = sorted(r["val"] for r in small.impute(["val"], "median").collect())
     assert got == pytest.approx(expected)
 

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframe_spark.operators import dedup
+from dataframe_spark.plans.stats import KNEES, LARGE
 
 
 @pytest.fixture(scope="module")
@@ -292,7 +293,7 @@ def test_minhash_identical_docs_collapse(spark):
     assert sigs_rows.count() == n + 2
 
 
-def test_minhash_sig_kernel_matches_jvm(spark):
+def test_minhash_sig_kernel_matches_jvm(spark, monkeypatch):
     """The arrow signature kernel must reproduce the JVM expression
     EXACTLY (integer equality over every doc and permutation): the
     banding candidate set — and with it q_dedup_minhash's
@@ -308,8 +309,10 @@ def test_minhash_sig_kernel_matches_jvm(spark):
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = dedup.minhash_signatures(df, "doc_id", "text", 3, 64, engine="arrow")
-    j = dedup.minhash_signatures(df, "doc_id", "text", 3, 64, engine="jvm")
+    monkeypatch.setitem(KNEES, "minhash_sig_kernel", 0)
+    a = dedup.minhash_signatures(df, "doc_id", "text", 3, 64)
+    monkeypatch.setitem(KNEES, "minhash_sig_kernel", LARGE)
+    j = dedup.minhash_signatures(df, "doc_id", "text", 3, 64)
     av = {r["id"]: r["sig"] for r in a.collect()}
     jv = {r["id"]: r["sig"] for r in j.collect()}
     assert len(av) == 200
@@ -332,7 +335,7 @@ def test_minhash_sig_kernel_empty_array_matches_jvm(spark):
     assert a[2] == [None] * 8
 
 
-def test_shingle_kernel_matches_jvm(spark):
+def test_shingle_kernel_matches_jvm(spark, monkeypatch):
     """The arrow shingle-chain kernel must reproduce the JVM
     expression chain EXACTLY — same ids kept, same xxhash64 values,
     same in-array (first-occurrence) order, same n_sh: every
@@ -367,8 +370,10 @@ def test_shingle_kernel_matches_jvm(spark):
     df = spark.createDataFrame(
         [(i, d) for i, d in enumerate(docs)], "doc_id long, text string"
     )
-    j = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3, engine="jvm")
-    a = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3, engine="arrow")
+    monkeypatch.setitem(KNEES, "shingle_kernel", LARGE)
+    j = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3)
+    monkeypatch.setitem(KNEES, "shingle_kernel", 0)
+    a = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3)
     jr = [(r.id, list(r.sh_arr), r.n_sh) for r in j.orderBy("id").collect()]
     ar = [(r.id, list(r.sh_arr), r.n_sh) for r in a.orderBy("id").collect()]
     assert len(jr) > 0 and jr == ar
@@ -405,26 +410,6 @@ def test_xxh64_kernel_exact(spark):
         data, np.array(starts, np.int64), np.array(lens, np.int64)
     )
     assert list(got) == expected
-
-
-def test_jaccard_pairs_engine_invariant(spark, monkeypatch):
-    """End-to-end: jaccard_pairs output is identical under either
-    shingle engine (the env override is the cert/parity hook)."""
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2, "alpha beta gamma delta epsilon zeta eta iota"),
-        (3, "alpha beta gamma delta epsilon zeta eta theta"),
-        (4, "totally different words in this document here now"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {}
-    for eng in ("jvm", "arrow"):
-        monkeypatch.setenv("SPARK_GRAFT_SHINGLE_ENGINE", eng)
-        pairs = dedup.jaccard_pairs(df, "doc_id", "text", 3, 0.5)
-        out[eng] = sorted(
-            (r.a_id, r.b_id, r.jaccard) for r in pairs.collect()
-        )
-    assert out["jvm"] == out["arrow"] and len(out["jvm"]) == 3
 
 
 def test_lsh_max_bucket_caps_candidates(spark):
@@ -786,38 +771,68 @@ def test_pagerank_assume_unique_matches_default(spark):
     assert got != want
 
 
-def test_jaccard_broadcast_gate_strategies_agree(spark, sf_dir):
-    """Every candidate strategy must produce the identical pair set:
-    the legacy df-order under forced broadcast, forced shuffle, and
-    the auto gate (the r9 1000x find auto-gated it), AND the r10
-    hash-order plan with demotion off and forced on. The global
-    order / join strategy move only performance, never the result."""
+def _shingle_set(text, n):
+    """Distinct word n-grams of ``text`` (whitespace tokens of the
+    lowercased text — jaccard_pairs' tokenization on ASCII input)."""
+    toks = (text or "").lower().split()
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _brute_force_jaccard(rows, n, t):
+    """All-pairs reference: {(a, b, jaccard)} with jaccard rounded to
+    4 places (the operator's rounding) and kept when >= t."""
+    import itertools
+
+    sh = {i: _shingle_set(txt, n) for i, txt in rows}
+    want = set()
+    for (i, a), (j, b) in itertools.combinations(sorted(sh.items()), 2):
+        if not a or not b:
+            continue
+        jac = round(len(a & b) / len(a | b), 4)
+        if jac >= t:
+            want.add((i, j, round(jac, 6)))
+    return want
+
+
+def _jaccard_both_scales(monkeypatch, docs, n, t):
+    """jaccard_pairs with the dedup_scale gate forced below (plain
+    shapes) and above (hot demotion, barriers, truncated bound,
+    counted verify)."""
+    out = {}
+    for side, knee in (("below", LARGE), ("above", 0)):
+        monkeypatch.setitem(KNEES, "dedup_scale", knee)
+        out[side] = {
+            (r["a_id"], r["b_id"], round(r["jaccard"], 6))
+            for r in dedup.jaccard_pairs(
+                docs, "doc_id", "text", n=n, threshold=t
+            ).collect()
+        }
+    return out
+
+
+def test_jaccard_broadcast_gate_strategies_agree(spark, sf_dir, monkeypatch):
+    """Both sides of the dedup_scale gate — the plain small shapes
+    and the scale machinery (sampled hot demotion, cache barriers,
+    truncated-bound pre-verify, counted broadcast verify) — produce
+    exactly the brute-force all-pairs Jaccard set on the corpus. The
+    gate moves only performance, never the result."""
     from dataframe_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-
-    def pairs(**kw):
-        return {
-            (r["a_id"], r["b_id"], round(r["jaccard"], 6))
-            for r in dedup.jaccard_pairs(
-                docs, "doc_id", "text", n=3, threshold=0.8, **kw
-            ).collect()
-        }
-
-    p_auto = pairs(order="df", broadcast_df_table=None)
-    p_bc = pairs(order="df", broadcast_df_table=True)
-    p_sh = pairs(order="df", broadcast_df_table=False)
-    p_hash = pairs(order="hash", demote_hot=False)
-    p_hot = pairs(order="hash", demote_hot=True)
-    assert p_auto == p_bc == p_sh == p_hash == p_hot
-    assert len(p_auto) > 0
+    rows = [(r["doc_id"], r["text"]) for r in docs.collect()]
+    assert all((t or "").isascii() for _, t in rows)  # tokenizer parity
+    want = _brute_force_jaccard(rows, 3, 0.8)
+    got = _jaccard_both_scales(monkeypatch, docs, 3, 0.8)
+    assert got["below"] == got["above"] == want
+    assert len(want) > 0
 
 
-def test_jaccard_hot_demotion_bitmap_is_order_only(spark):
+def test_jaccard_hot_demotion_bitmap_is_order_only(spark, monkeypatch):
     """A corpus with a genuinely hot shingle (a shared template
     sentence in every doc): force the sampled hot bitmap to be
     non-empty (fraction 1.0, hot_min 2) and pin that demotion
-    changes candidates, never the verified pair set."""
+    changes candidates, never the verified pair set — which must
+    equal the brute-force all-pairs Jaccard."""
     import dataframe_spark.operators.dedup as dd
 
     base = "the quick brown fox jumps over the lazy dog again and again"
@@ -830,27 +845,14 @@ def test_jaccard_hot_demotion_bitmap_is_order_only(spark):
     )
     assert probe is not None  # the template grams really are hot
     orig = dd._sampled_hot_probe
-    dd._sampled_hot_probe = lambda *a, **kw: orig(
-        *a, fraction=1.0, hot_min=2
+    monkeypatch.setattr(
+        dd, "_sampled_hot_probe",
+        lambda *a, **kw: orig(*a, fraction=1.0, hot_min=2),
     )
-    try:
-        p_hot = {
-            (r["a_id"], r["b_id"], round(r["jaccard"], 6))
-            for r in dd.jaccard_pairs(
-                docs, "doc_id", "text", 3, 0.5,
-                order="hash", demote_hot=True,
-            ).collect()
-        }
-    finally:
-        dd._sampled_hot_probe = orig
-    p_df = {
-        (r["a_id"], r["b_id"], round(r["jaccard"], 6))
-        for r in dd.jaccard_pairs(
-            docs, "doc_id", "text", 3, 0.5, order="df"
-        ).collect()
-    }
-    assert p_hot == p_df
-    assert len(p_df) > 0
+    got = _jaccard_both_scales(monkeypatch, docs, 3, 0.5)
+    want = _brute_force_jaccard(rows, 3, 0.5)
+    assert got["above"] == got["below"] == want
+    assert len(want) > 0
 
 
 def test_long_array_literal_matches_list_literal(spark):
@@ -879,7 +881,7 @@ def test_long_array_literal_matches_list_literal(spark):
     assert [r["w"] for r in got] == signed
 
 
-def test_jaccard_prefix_asymmetry_matches_brute_force(spark):
+def test_jaccard_prefix_asymmetry_matches_brute_force(spark, monkeypatch):
     """The r13 index/probe prefix asymmetry directs pairs by
     (n_sh, id) and truncates the smaller side to the PPJoin index
     prefix — lossless by the overlap lemma. Pin the full pair set
@@ -888,10 +890,6 @@ def test_jaccard_prefix_asymmetry_matches_brute_force(spark):
     length (subset/superset docs near the threshold), equal-length
     ties (the id tie-break branch), and ids whose numeric order
     disagrees with length order."""
-    import itertools
-
-    import dataframe_spark.operators.dedup as dd
-
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [
         (9, base),                                 # big id, short doc
@@ -904,30 +902,9 @@ def test_jaccard_prefix_asymmetry_matches_brute_force(spark):
         (7, ""),                                   # empty
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    def shingles(text, n=2):
-        toks = text.lower().split()
-        return {
-            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-        }
-
-    t = 0.6
-    want = set()
-    sh = {i: shingles(txt) for i, txt in rows}
-    for (i, a), (j, b) in itertools.combinations(sorted(sh.items()), 2):
-        if not a or not b:
-            continue
-        jac = round(len(a & b) / len(a | b), 4)
-        if jac >= t:
-            want.add((i, j, round(jac, 6)))
-    for order in ("hash", "df"):
-        got = {
-            (r["a_id"], r["b_id"], round(r["jaccard"], 6))
-            for r in dd.jaccard_pairs(
-                docs, "doc_id", "text", n=2, threshold=t, order=order
-            ).collect()
-        }
-        assert got == want, order
+    want = _brute_force_jaccard(rows, 2, 0.6)
+    got = _jaccard_both_scales(monkeypatch, docs, 2, 0.6)
+    assert got["below"] == got["above"] == want
     assert len(want) >= 3  # unequal-length pairs really are present
     # doc 9 is SHORTER than doc 1/2 yet has the larger id, so the
     # asymmetric direction (by n_sh) disagrees with id order — make

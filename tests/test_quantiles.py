@@ -97,7 +97,7 @@ def test_radix_bin_monotone(spark):
     assert nan_bin > max(b for b, v in zip(bins, vals) if not math.isnan(v))
 
 
-def test_grouped_quantiles_paths_agree_and_gate_engages(lineitem):
+def test_grouped_quantiles_paths_agree_and_gate_engages(lineitem, monkeypatch):
     """Both per-group strategies produce identical rows, and the
     auto gate picks buffered below the threshold / radix above it
     (observable from the physical plan: the radix path has Window
@@ -123,15 +123,11 @@ def test_grouped_quantiles_paths_agree_and_gate_engages(lineitem):
     plan_d = forced.df._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan_d
 
-    import dataframe_spark.core as core_mod
+    from dataframe_spark.plans.stats import KNEES
 
-    old = core_mod.QUANTILE_BUFFER_MAX_BYTES
-    core_mod.QUANTILE_BUFFER_MAX_BYTES = 0
-    try:
-        gated = grouped.quantiles("l_extendedprice", [0.5])
-        assert "Window" in gated.df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        core_mod.QUANTILE_BUFFER_MAX_BYTES = old
+    monkeypatch.setitem(KNEES, "quantile_buffer", 0)
+    gated = grouped.quantiles("l_extendedprice", [0.5])
+    assert "Window" in gated.df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_winsorize_clips_to_quantile_band(lineitem):

@@ -222,39 +222,6 @@ def test_semdedup_known_groups(spark):
     assert got[5] and got[6]
 
 
-def test_semdedup_edge_engines_agree(spark, monkeypatch):
-    """The GEMM edge path (bucket = cluster id, unrounded threshold)
-    must produce the same (id, cluster, keep) rows as the expression
-    join for non-degenerate data — same fit (engine-independent),
-    same clusters, same edge set, same components. Random unit-ish
-    vectors keep every pair's cosine far from tau, so float
-    summation-order differences between GEMM and the sequential
-    expression dot cannot flip an edge."""
-    import random
-
-    rng = random.Random(77)
-    rows = []
-    for i in range(120):
-        base = [rng.gauss(0, 1) for _ in range(8)]
-        rows.append((i, [round(x, 3) for x in base]))
-        if i % 4 == 0:  # a near-duplicate partner
-            rows.append(
-                (1000 + i, [round(x * 1.5, 3) for x in base])
-            )
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {}
-    for eng in ("jvm", "gemm"):
-        monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_EDGES", eng)
-        res = similarity.semdedup(
-            df, "vec_id", "embedding", k=4, tau=0.9, max_iter=2
-        )
-        out[eng] = sorted(
-            (r["id"], r["cluster"], r["keep"]) for r in res.collect()
-        )
-    assert out["jvm"] == out["gemm"]
-    assert any(not keep for _, _, keep in out["jvm"])  # dups found
-
-
 def test_semdedup_null_embedding_excluded(spark):
     rows = [(0, [1.0, 0.0]), (1, None), (2, [1.0, 0.0001])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")

@@ -275,13 +275,15 @@ def sweep_arrow_parity(argv):
     driver SF (r13, VERDICT r12 ask #3b): the engine knees resolve
     to the JVM expressions at every driver SF, so the kernels that
     run at 100x+ were otherwise covered only by pinned bit-equality
-    unit tests. Forcing SPARK_GRAFT_SIG_ENGINE=arrow (the r12
-    minhash signature kernel) and SPARK_GRAFT_SHINGLE_ENGINE=arrow
-    (the r13 tokenize→shingle→xxhash64 kernel) routes every
-    shingle-based query through the kernel plans and verifies the
-    FULL registry against the DuckDB oracle on them."""
-    os.environ["SPARK_GRAFT_SIG_ENGINE"] = "arrow"
-    os.environ["SPARK_GRAFT_SHINGLE_ENGINE"] = "arrow"
+    unit tests. Setting the ``minhash_sig_kernel`` (the r12 minhash
+    signature kernel) and ``shingle_kernel`` (the r13
+    tokenize→shingle→xxhash64 kernel) knees to 0 in-process routes
+    every shingle-based query through the kernel plans and verifies
+    the FULL registry against the DuckDB oracle on them."""
+    from dataframe_spark.plans.stats import KNEES
+
+    forced = {"minhash_sig_kernel": 0, "shingle_kernel": 0}
+    KNEES.update(forced)
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     tag = os.path.basename(sf_dir.rstrip("/"))
     from tools.parity import run_parity
@@ -292,8 +294,7 @@ def sweep_arrow_parity(argv):
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
     _write(f"CERT_parity_arrow_{tag}.json", {
         "sweep": "arrow_parity", "sf_dir": sf_dir,
-        "forced": {"SPARK_GRAFT_SIG_ENGINE": "arrow",
-                   "SPARK_GRAFT_SHINGLE_ENGINE": "arrow"},
+        "forced": forced,
         "n_pass": n_pass, "n_fail": n_fail, "n_rows_only": n_rowsonly,
         "results": results,
     })
@@ -810,6 +811,7 @@ def _jaccard_stage_profile(spark, d, threshold=0.8):
     decomposition of one end-to-end run, and their sum approximates
     the query wall (plus scheduling)."""
     import dataframe_spark.operators.dedup as dd
+    from dataframe_spark.plans.stats import above
     from dataframe_spark.tables import load_table
 
     docs = load_table(spark, d, "documents")
@@ -829,7 +831,7 @@ def _jaccard_stage_profile(spark, d, threshold=0.8):
     prefix = stage(
         "prefix",
         dd._hash_order_prefix(arrs, docs, "doc_id", "text", 3, threshold,
-                              None),
+                              above("dedup_scale", docs)),
     )
     cands = stage("candidates", dd._prefix_candidates(prefix, threshold))
     pruned = stage(
@@ -898,7 +900,7 @@ def _minhash_stage_profile(
         ),
     )
     # persist_bands=True mirrors minhash_dedup_pairs above its
-    # 128 MB gate (r13) — every profiled corpus is far above it.
+    # dedup_scale gate (r13) — every profiled corpus is far above it.
     # The banded materialization is EAGER (it runs at call time,
     # not first action), so the construction is timed explicitly:
     # stage()'s argument-evaluation shape would leave the banding
@@ -973,9 +975,9 @@ def _semdedup_stage_profile(spark, d, tau=0.4, max_iter=3, seed=42):
     )
     # mirror the operator's r13 edge-engine gate (the GEMM kernel at
     # cert scale, the expression join below the knee)
-    from dataframe_spark.plans.stats import plan_size_bytes
+    from dataframe_spark.plans.stats import above
 
-    if plan_size_bytes(emb) > sim._SEMDEDUP_GEMM_KNEE:
+    if above("semdedup_gemm", emb):
         prof["edge_engine"] = "gemm"
         edges = stage(
             "pair_join_persist",
@@ -1388,10 +1390,10 @@ def sweep_barrier_ab(argv):
     persisted frame measured 2.5-2.8x wall inflation — but that
     number lived only in the survey prose. This sweep times the
     jaccard flagship end-to-end at 1000x with barriers ON vs OFF
-    (SPARK_GRAFT_NO_CACHE_BARRIER, read at plan-build time),
-    INTERLEAVED A-B-B-A in one session so both modes sample the
-    same box state, identical plan and data, storage cache cleared
-    per rep. -> CERT_barrier_ab.json"""
+    (OFF swaps dedup._materialize for a no-op; the barriers run at
+    plan-build time), INTERLEAVED A-B-B-A in one session so both
+    modes sample the same box state, identical plan and data,
+    storage cache cleared per rep. -> CERT_barrier_ab.json"""
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
     _guard_stray_jvm()
@@ -1404,19 +1406,20 @@ def sweep_barrier_ab(argv):
     if not ensure(spark, DIR_100X, DIR_1000X):
         print("1000x generation failed", file=sys.stderr)
         sys.exit(1)
+    import dataframe_spark.operators.dedup as dd
+
     qs = entry.queries()
     walls = {"on": [], "off": []}
+    barrier = dd._materialize
     for mode in ("on", "off", "off", "on"):
-        os.environ["SPARK_GRAFT_NO_CACHE_BARRIER"] = (
-            "0" if mode == "on" else "1"
-        )
+        dd._materialize = barrier if mode == "on" else (lambda df: None)
         spark.catalog.clearCache()
         t0 = time.monotonic()
         _noop(qs["q_dedup_ngram_jaccard"](spark, DIR_1000X))
         w = round(time.monotonic() - t0, 3)
         walls[mode].append(w)
         print(f"barrier {mode}: {w}", flush=True)
-    os.environ.pop("SPARK_GRAFT_NO_CACHE_BARRIER", None)
+    dd._materialize = barrier
     stats = {m: _rep_stats(w) for m, w in walls.items()}
     _write("CERT_barrier_ab.json", {
         "sweep": "barrier_ab", "query": "q_dedup_ngram_jaccard",
